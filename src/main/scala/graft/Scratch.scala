@@ -83,7 +83,10 @@ object Scratch {
     val d = dir(prefix)
     ephemeral.add(Paths.get(d))
     df.write.mode("overwrite").parquet(d)
-    df.sparkSession.read.parquet(d)
+    // read back with the written frame's schema: ScratchSpec pins it equal
+    // to Spark's inference of the written files for every type parquet
+    // stores, so the read launches no footer job
+    df.sparkSession.read.schema(df.schema).parquet(d)
   }
 
   // per-invocation materialize dirs, swept between queries by the harnesses
@@ -116,8 +119,12 @@ object Scratch {
     */
   def buildsCount: Long = builds.get()
 
+  // a built memo stage: its scratch directory and the schema Spark inferred
+  // from the build's own files (the directory is immutable once built)
+  private final case class MemoStage(path: String, schema: org.apache.spark.sql.types.StructType)
+
   private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[String]]()
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[MemoStage]]()
 
   /** [[materialize]], memoized on a logical-stage key: the first call per JVM
     * computes `df` and writes it to scratch parquet; every later call with
@@ -138,6 +145,11 @@ object Scratch {
     * installs and completes it, racers (and nested stages on other keys)
     * proceed independently; a failed compute removes its entry so a retry
     * is possible.
+    *
+    * The schema is resolved once per build: the build infers it from the
+    * written files, the entry stores it beside the path, and every hit reads
+    * `spark.read.schema(stored)`, which launches no job. [[clearMemo]] drops
+    * both.
     */
   def memoize(spark: org.apache.spark.sql.SparkSession, key: String)
              (df: => DataFrame): DataFrame =
@@ -158,7 +170,7 @@ object Scratch {
 
   private def memoizeWith(spark: org.apache.spark.sql.SparkSession, key: String)
                          (write: String => Unit): DataFrame = {
-    val fresh = new java.util.concurrent.CompletableFuture[String]()
+    val fresh = new java.util.concurrent.CompletableFuture[MemoStage]()
     val prior = memo.putIfAbsent(key, fresh)
     val fut =
       if (prior != null) prior
@@ -166,8 +178,9 @@ object Scratch {
         try {
           val d = dir("graft_memo")
           write(d)
+          val schema = spark.read.parquet(d).schema
           builds.incrementAndGet()
-          fresh.complete(d)
+          fresh.complete(MemoStage(d, schema))
         } catch {
           case e: Throwable =>
             memo.remove(key, fresh)
@@ -176,7 +189,8 @@ object Scratch {
         }
         fresh
       }
-    spark.read.parquet(fut.join())
+    val stage = fut.join()
+    spark.read.schema(stage.schema).parquet(stage.path)
   }
 
   /** Fan a narrow frame out to the session's parallelism BEFORE expensive
@@ -308,7 +322,7 @@ object Scratch {
     */
   def clearMemo(): Unit = {
     memo.values.forEach { f =>
-      if (f.isDone && !f.isCompletedExceptionally) deleteRecursively(Paths.get(f.join()))
+      if (f.isDone && !f.isCompletedExceptionally) deleteRecursively(Paths.get(f.join().path))
     }
     memo.clear()
   }
